@@ -1,6 +1,6 @@
 """cdc — the change-data-capture apply engine.
 
-apply.py     normalize → salted LWW dedup → copy-on-write/MoR MERGE → tagged commit
+apply.py     normalize → LWW dedup aggregate → copy-on-write/MoR MERGE → tagged commit
 partial.py   column-level LWW for sparse change feeds (Paimon partial-update analog)
 aggregate.py per-column fold specs sum/count/max/min/last/first (Paimon aggregation analog)
 delete.py    out-of-band predicate/keyed deletes (Delta DELETE FROM analog)

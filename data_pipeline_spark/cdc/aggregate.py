@@ -47,7 +47,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..icebox.table import IceboxTable
-from .apply import _bad_event_pred, _op_rank_col
+from .apply import _bad_event_pred, _merge, _op_rank_col
 from .partial import _NEG, _apply_columnar
 
 SPECS = ("sum", "count", "max", "min", "last", "first")
@@ -162,17 +162,14 @@ def apply_batch_agg(
     spine's contract); a wholly-stale batch is guarded per key (the old
     accumulator is re-emitted unchanged, nothing is double-counted on
     tag replay by the exactly-once gate)."""
-    return _apply_columnar(
-        table,
-        events,
-        batch_id,
-        lambda ev, key, cols: fold_agg_batch(ev, key, cols, specs),
-        _combine_for(specs),
-        mode="aggregate",
-        tag_prefix=tag_prefix,
-        merge_strategy=merge_strategy,
-        retry_on_conflict=retry_on_conflict,
-        enforce_order=enforce_order,
+    return _merge(
+        table, events, batch_id, tag_prefix, retry_on_conflict,
+        lambda ev, tag: _apply_columnar(
+            table, ev, batch_id, tag,
+            lambda ev, key, cols: fold_agg_batch(ev, key, cols, specs),
+            _combine_for(specs), "aggregate",
+            merge_strategy, retry_on_conflict, enforce_order,
+        ),
     )
 
 

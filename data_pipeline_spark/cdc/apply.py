@@ -28,25 +28,23 @@ dropDuplicates (resolve-footprints.scala:96) to a deterministic window.
 
 Scale design (what survives a 1000-executor / 100 TB target):
 
-  * dedup strategies (identical results, tested against each other):
-      - "agg" (apply default): one hash aggregate
-        `max_by(payload, (lsn, op_rank))` per key. Tungsten's PARTIAL
-        aggregation reduces every map partition to one candidate per key
-        BEFORE the exchange — each map task acts as a salt bucket, so a
-        hot key ships at most #map-tasks rows through the shuffle. This
-        is the salted two-phase pattern executed by the engine itself,
-        one exchange, no sort.
-      - "window" (the explicit two-phase form): phase 1 ranks within
-        (doc_id, salt), phase 2 ranks the ≤ n_salts survivors — the
-        reference's shifted-grid trick
-        (resolve-footprints.scala:104-110,128-133) re-applied to hash
-        salts. Two exchanges + sorts; kept as the spec-literal path.
+  * dedup: one hash aggregate `max_by(payload, (lsn, op_rank))` per key
+    (_dedup_with_stats). Tungsten's PARTIAL aggregation reduces every
+    map partition to one candidate per key BEFORE the exchange — each
+    map task acts as a salt bucket, so a hot key ships at most
+    #map-tasks rows through the shuffle. This is the salted two-phase
+    pattern executed by the engine itself, one exchange, no sort. The
+    explicit two-phase form — the reference's shifted-grid trick
+    (resolve-footprints.scala:104-110,128-133) re-applied to hash salts —
+    is the standalone operator lww_dedup(strategy="window"), tested
+    equal to the aggregate.
   * merge strategies:
       - "delta" (merge-on-read — the steady-state production shape at
-        100 TB): the deduped winners are appended as per-bucket delta
-        files (icebox.commit_delta); per-batch write cost is O(batch),
-        never O(table). Reads LWW-merge base ∪ deltas; compact_if_needed
-        folds deltas back when they outgrow a ratio of the base.
+        100 TB): the deduped winners are staged as one compact delta
+        file set and appended to the manifest (_apply_delta_fused);
+        per-batch write cost is O(batch), never O(table). Reads
+        LWW-merge base ∪ deltas; compact_if_needed folds deltas back
+        when they outgrow a ratio of the base.
       - "join" (copy-on-write when the deduped batch is broadcastable):
         `target LEFT JOIN broadcast(winners)` — the big side never
         shuffles and never sorts; additions come from an existence probe
@@ -60,15 +58,22 @@ Scale design (what survives a 1000-executor / 100 TB target):
     reference reading one cty= prefix,
     /root/reference/citygml/build-citygml.sh:37); no job ever scans the
     full table for bookkeeping;
-  * per batch with the default "agg" dedup: the CoW paths run ONE
-    stats+dedup job over the raw events (stats fold into the dedup
-    aggregate, _dedup_with_stats) and ONE merge/write job; the delta path
-    is FUSED further (_apply_delta_fused): one heavy
-    scan→dedup→sorted-write job (per-winner stats ride along as hidden
-    parquet columns) plus one tiny per-bucket rollup over the written
-    compact file — no persist of the batch, exactly one pass over raw
-    events. Driver work is O(#touched buckets) — one small collect, one
+  * per batch: the CoW paths run ONE stats+dedup job over the raw
+    events (stats fold into the dedup aggregate, _dedup_with_stats) and
+    ONE merge/write job; the delta path is FUSED further
+    (_apply_delta_fused): one heavy scan→dedup→sorted-write job
+    (per-winner stats ride along as hidden parquet columns) plus one tiny
+    per-bucket rollup over the written compact file — no persist of the
+    batch, exactly one pass over raw events. A batch with no events
+    commits its tag as a metadata-only snapshot (no write job, no data
+    dir). Driver work is O(#touched buckets) — one small collect, one
     O(buckets) manifest write — never O(#events).
+
+All three merge engines (this module's row-level LWW, cdc.partial's
+column-level LWW and cdc.aggregate's fold specs) share one prologue and
+epilogue (_merge): the exactly-once tag check, schema normalization
+with rollback on any failure, the malformed-event refusal, the lineage
+rows and the empty-batch commit.
 """
 
 from __future__ import annotations
@@ -249,8 +254,6 @@ def _quarantine_split(
     per-batch OVERWRITE makes crash-replays idempotent on the DLQ (both
     reason families share the one write, so a batch with both kinds of
     bad rows still lands exactly one DLQ dir)."""
-    import os
-
     bad_pred = _bad_event_pred(key)
     viols = _expectation_preds(expectations)
     drop_pred = bad_pred
@@ -280,13 +283,126 @@ def _quarantine_split(
     return ev.filter(~drop_pred)
 
 
+def _stored_rows(winners: DataFrame, key: str, cols: list[str], *extra) -> DataFrame:
+    """LWW winners → the stored row shape: bucket, key, payload, the
+    winner's lsn as `_lsn`, a delete winner as a `_tombstone` row (kept
+    so late-arriving older events cannot resurrect the key). `extra`
+    columns ride along."""
+    return winners.select(
+        "_b",
+        F.col(key),
+        *[F.col(c) for c in cols if c != key],
+        F.col("lsn").alias("_lsn"),
+        (F.col("op") == "delete").alias("_tombstone"),
+        *extra,
+    )
+
+
+def _stats_aggs(dead) -> list:
+    """Per-bucket rollup of one-row-per-key stats (_n_ev/_wm/_bad) that
+    every engine's refusal and lineage read; `dead` marks delete winners."""
+    return [
+        F.sum("_n_ev").alias("events_applied"),
+        F.max("_wm").alias("lsn_watermark"),
+        F.sum("_bad").alias("bad_events"),
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dead.cast("long")).alias("n_dels"),
+    ]
+
+
+def _key_stats_aggs(key: str) -> list:
+    """Per-bucket key bounds + key bloom (needs key_bloom_prep): keyed
+    reads skip a delta when no probe fits the range / the key set."""
+    return [F.min(key).alias("_kmin"), F.max(key).alias("_kmax"), *key_bloom_agg_exprs()]
+
+
+def _delta_stats(stats) -> dict:
+    """commit_staged_delta/commit_delta statistics from the stats rows."""
+    return {
+        "bucket_rows": {int(r["_b"]): int(r["n"]) for r in stats},
+        "key_bounds": {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats},
+        "key_blooms": pack_key_blooms(stats),
+    }
+
+
+def _refuse_malformed(stats, batch_id, key: str) -> None:
+    bad = sum(r["bad_events"] or 0 for r in stats)
+    if bad:
+        raise ValueError(
+            f"batch {batch_id}: {bad} events with unknown op, null lsn, "
+            f"or null {key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
+        )
+
+
+def _lineage(stats, batch_id) -> list[tuple]:
+    """Per-bucket lineage rows. rows_upserted counts non-delete winners,
+    rows_deleted counts delete winners (tombstones written) — both are
+    batch-intrinsic, so lineage needs no target probe."""
+    bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
+    return [
+        (
+            bid,
+            int(r["_b"]),
+            int(r["events_applied"]),
+            int(r["n"]) - int(r["n_dels"] or 0),
+            int(r["n_dels"] or 0),
+            int(r["lsn_watermark"]),
+        )
+        for r in stats
+    ]
+
+
+def _merge_summary(stats, strategy: str, **extra) -> dict:
+    touched = sorted(int(r["_b"]) for r in stats)
+    return {
+        "operation": "merge",
+        "strategy": strategy,
+        "touched_buckets": len(touched),
+        # ids let IceboxTable.changes() bucket-prune, and concurrent
+        # rewrites prove bucket-disjointness when rebasing past this commit
+        "bucket_ids": touched,
+        "winners": sum(int(r["n"]) for r in stats),
+        **extra,
+    }
+
+
+def _merge(
+    table: IceboxTable,
+    events: DataFrame,
+    batch_id: int | str,
+    tag_prefix: str,
+    retry_on_conflict: int,
+    body,
+) -> IceboxTable:
+    """The prologue and epilogue every merge engine shares: a committed
+    tag `{tag_prefix}:{batch_id}` makes the call a no-op (exactly-once);
+    ANY failure of `body(ev, tag)` rolls back the schema evolution
+    normalize_events applied to the handle; `body` returns the table at
+    its new snapshot, or None for a batch with no events — then the tag
+    alone is committed as a metadata-only snapshot."""
+    tag = f"{tag_prefix}:{batch_id}"
+    if table.has_tag(tag):
+        return table
+    saved = table.manifest["current_schema_id"], dict(table.manifest["schemas"])
+    try:
+        out = body(normalize_events(events, table), tag)
+        if out is None:
+            out = table._publish(
+                tag,
+                {"operation": "merge", "events": 0},
+                retry_on_conflict=retry_on_conflict,
+            )
+        return out
+    except Exception:
+        table.manifest["current_schema_id"], table.manifest["schemas"] = saved
+        raise
+
+
 def apply_batch(
     table: IceboxTable,
     events: DataFrame,
     batch_id: int | str,
-    n_salts: int = 16,
     tag_prefix: str = "batch",
-    dedup_strategy: str = "agg",
     merge_strategy: str = "auto",
     retry_on_conflict: int = 0,
     quarantine_dir: str | None = None,
@@ -325,7 +441,8 @@ def apply_batch(
 
     Exactly-once: the commit is tagged `{tag_prefix}:{batch_id}`; if that
     tag is already committed the whole call is a no-op (idempotent replay
-    from any checkpoint).
+    from any checkpoint). A batch with no events commits its tag as a
+    metadata-only snapshot.
 
     retry_on_conflict: optimistic-concurrency rebases when ANOTHER writer
     (a second ingest stream, a compactor, a materialized-view maintainer)
@@ -339,172 +456,72 @@ def apply_batch(
     merge_strategy: "auto" broadcasts the deduped batch when it is small
     enough (steady-state CDC), else shuffles; "join"/"shuffle" force.
     "delta" writes the winners as merge-on-read delta files — per-batch
-    write cost is O(batch), never O(table) (see icebox.commit_delta).
+    write cost is O(batch), never O(table) (see _apply_delta_fused).
 
-    Lineage semantics: rows_upserted counts non-delete winners,
-    rows_deleted counts delete winners (tombstones written) — both are
-    batch-intrinsic, so lineage needs no target probe.
-
-    Per-batch Spark jobs with the default "agg" dedup: ONE stats/dedup
-    job over the raw events (see _dedup_with_stats) and ONE merge+write
-    job. A batch rejected for malformed events leaves no trace: the
-    schema evolution normalize_events applied in-memory is rolled back.
+    Dedup is always the one max_by hash aggregate (_dedup_with_stats).
+    Per-batch Spark jobs: ONE stats/dedup job over the raw events and
+    ONE merge+write job (the delta path: one fused scan→dedup→write job
+    and one tiny stats job over the written file). A batch rejected for
+    malformed events leaves no trace: the schema evolution
+    normalize_events applied in-memory is rolled back.
     """
-    tag = f"{tag_prefix}:{batch_id}"
-    if table.has_tag(tag):
-        return table
 
+    def body(ev: DataFrame, tag: str) -> IceboxTable | None:
+        if quarantine_dir is not None:
+            ev = _quarantine_split(ev, table.key, batch_id, quarantine_dir,
+                                   expectations=expectations)
+        elif expectations:
+            # strict mode: violations reject the whole batch, same contract
+            # as malformed events (one aggregate job, only when declared)
+            viols = _expectation_preds(expectations)
+            row = ev.select(
+                *[F.sum(vp.cast("long")).alias(f"_x{i}")
+                  for i, (_, vp) in enumerate(viols)]
+            ).first()
+            counts = {
+                name: int(row[f"_x{i}"] or 0)
+                for i, (name, _) in enumerate(viols)
+                if row[f"_x{i}"]
+            }
+            if counts:
+                raise ValueError(
+                    f"batch {batch_id}: expectation violations {counts} — "
+                    "refusing to apply (set quarantine_dir to route them to "
+                    "the dead-letter queue instead)"
+                )
+        if merge_strategy == "delta":
+            return _apply_delta_fused(table, ev, batch_id, tag, retry_on_conflict)
+        return _apply_cow(table, ev, batch_id, tag, merge_strategy, retry_on_conflict)
+
+    return _merge(table, events, batch_id, tag_prefix, retry_on_conflict, body)
+
+
+def _apply_cow(
+    table: IceboxTable,
+    ev: DataFrame,
+    batch_id: int | str,
+    tag: str,
+    merge_strategy: str,
+    retry_on_conflict: int,
+) -> IceboxTable | None:
+    """Copy-on-write apply of the normalized events: the persisted
+    winners feed both the per-bucket stats collect and the merge, which
+    rewrites the touched buckets in full."""
     key = table.key
-    # snapshot the in-memory schema state so a rejected batch can roll
-    # back the evolution normalize_events performs eagerly
-    saved_schema_id = table.manifest["current_schema_id"]
-    saved_schemas = dict(table.manifest["schemas"])
-    ev = normalize_events(events, table)
-    if quarantine_dir is not None:
-        ev = _quarantine_split(ev, key, batch_id, quarantine_dir,
-                               expectations=expectations)
-    elif expectations:
-        # strict mode: violations reject the whole batch, same contract
-        # as malformed events (one aggregate job, only when declared)
-        viols = _expectation_preds(expectations)
-        row = ev.select(
-            *[F.sum(vp.cast("long")).alias(f"_x{i}")
-              for i, (_, vp) in enumerate(viols)]
-        ).first()
-        counts = {
-            name: int(row[f"_x{i}"] or 0)
-            for i, (name, _) in enumerate(viols)
-            if row[f"_x{i}"]
-        }
-        if counts:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: expectation violations {counts} — "
-                "refusing to apply (set quarantine_dir to route them to "
-                "the dead-letter queue instead)"
-            )
-    if merge_strategy == "delta" and dedup_strategy == "agg":
-        # fused fast path: ONE heavy job (scan → dedup agg → sorted delta
-        # write, per-winner stats riding along as extra parquet columns),
-        # then a tiny stats job over the written compact file — no
-        # persist/cache of the batch, no second pass over raw events
-        return _apply_delta_fused(
-            table, ev, batch_id, tag, saved_schema_id, saved_schemas,
-            retry_on_conflict=retry_on_conflict,
-        )
-    winners = None
-    ev_persisted = False
+    winners = _dedup_with_stats(ev, key, table).persist()
     try:
-        if dedup_strategy == "agg":
-            winners = _dedup_with_stats(ev, key, table).persist()
-            stats = (
-                winners.groupBy("_b")
-                .agg(
-                    F.sum("_n_ev").alias("events_applied"),
-                    F.max("_wm").alias("lsn_watermark"),
-                    F.sum("_bad").alias("bad_events"),
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
-                    F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
-                    F.min(key).alias("_kmin"),
-                    F.max(key).alias("_kmax"),
-                )
-                .collect()
-            )
-        else:
-            # spec-literal window path: dedup and stats are separate scans
-            ev = ev.persist()
-            ev_persisted = True
-            winners = (
-                lww_dedup(ev, key=key, n_salts=n_salts, strategy=dedup_strategy)
-                .withColumn("_b", table.bucket_of())
-                .persist()
-            )
-            stats = (
-                ev.withColumn("_b", table.bucket_of())
-                .groupBy("_b")
-                .agg(
-                    F.count(F.lit(1)).alias("events_applied"),
-                    F.max("lsn").alias("lsn_watermark"),
-                    F.sum(_bad_event_pred(key).cast("long")).alias("bad_events"),
-                )
-                .join(
-                    winners.groupBy("_b").agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum((F.col("op") != "delete").cast("long")).alias("n_ups"),
-                        F.sum((F.col("op") == "delete").cast("long")).alias("n_dels"),
-                        F.min(key).alias("_kmin"),
-                        F.max(key).alias("_kmax"),
-                    ),
-                    "_b",
-                    "full",
-                )
-                .collect()
-            )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: {bad} events with unknown op, null lsn, "
-                f"or null {key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
-                tag=tag,
-                summary={"operation": "merge", "events": 0},
-                retry_on_conflict=retry_on_conflict,
-            )
-        n_winners = sum(r["n"] or 0 for r in stats)
+        stats = winners.groupBy("_b").agg(*_stats_aggs(F.col("op") == "delete")).collect()
+        _refuse_malformed(stats, batch_id, key)
+        if not stats:
+            return None
+        n_winners = sum(int(r["n"]) for r in stats)
         if merge_strategy == "auto":
             small_batch = n_winners <= BROADCAST_ROW_LIMIT
             vs_table = table.total_rows >= JOIN_TABLE_RATIO * n_winners
             merge_strategy = "join" if (small_batch and vs_table) else "shuffle"
-
+        summary = _merge_summary(stats, merge_strategy)
+        touched = summary["bucket_ids"]
         cols = [f.name for f in table.schema.fields]
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n_ups"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
-            )
-            for r in stats
-        ]
-        summary = {
-            "operation": "merge",
-            "strategy": merge_strategy,
-            "touched_buckets": len(touched),
-            # ids let IceboxTable.changes() bucket-prune across CoW
-            # commits (a delta commit's bucket_rows already carries them)
-            "bucket_ids": sorted(touched),
-            "winners": n_winners,
-        }
-
-        if merge_strategy == "delta":
-            deltas = winners.select(
-                "_b",
-                F.col(key),
-                *[F.col(c) for c in cols if c != key],
-                F.col("lsn").alias("_lsn"),
-                (F.col("op") == "delete").alias("_tombstone"),
-            )
-            bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats if r["n"]}
-            key_bounds = {
-                int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats if r["n"]
-            }
-            return table.commit_delta(
-                deltas, bucket_rows, tag=tag, lineage=lineage, summary=summary,
-                key_bounds=key_bounds, retry_on_conflict=retry_on_conflict,
-            )
-
         # target rows (incl. tombstones) of touched buckets only — the
         # analog of the reference reading one cty= prefix,
         # /root/reference/citygml/build-citygml.sh:37
@@ -517,17 +534,14 @@ def apply_batch(
             merged,
             touched,
             tag=tag,
-            lineage=lineage,
+            lineage=_lineage(stats, batch_id),
             summary=summary,
             repartition=False,  # both merge plans already cluster by _b
             collect_stats=False,  # hot per-batch path: analyze()/compaction harvest later
             retry_on_conflict=retry_on_conflict,
         )
     finally:
-        if ev_persisted:
-            ev.unpersist()
-        if winners is not None:
-            winners.unpersist()
+        winners.unpersist()
 
 
 def _apply_delta_fused(
@@ -535,10 +549,8 @@ def _apply_delta_fused(
     ev: DataFrame,
     batch_id: int | str,
     tag: str,
-    saved_schema_id: int,
-    saved_schemas: dict,
-    retry_on_conflict: int = 0,
-) -> IceboxTable:
+    retry_on_conflict: int,
+) -> IceboxTable | None:
     """Merge-on-read apply with the per-batch job count minimized:
 
       job 1 (heavy, the ONLY pass over raw events): scan → one hash
@@ -552,30 +564,20 @@ def _apply_delta_fused(
              bucket_rows, lineage.
       then the metadata-only manifest publish.
 
-    Versus the generic path this removes the winners persist (no cache
-    serialization of token arrays — the dominant per-batch constant
-    measured at small batch sizes) and the separate write job. ANY
-    failure after the stage (malformed batch, executor loss during the
-    stats job, ConcurrentCommitError at publish) deletes the staged dir
-    and rolls back the in-memory schema evolution — a failed apply
-    leaves no orphan data and no half-evolved handle state.
+    No winners persist (no cache serialization of token arrays — the
+    dominant per-batch constant measured at small batch sizes) and no
+    separate write job. ANY failure after the stage (malformed batch,
+    executor loss during the stats job, ConcurrentCommitError at
+    publish) deletes the staged dir, and so does an empty batch — a
+    failed or empty apply leaves no orphan data.
     """
     import shutil
 
     key = table.key
     cols = [f.name for f in table.schema.fields]
-    winners = _dedup_with_stats(ev, key, table)
-    deltas = winners.select(
-        "_b",
-        F.col(key),
-        *[F.col(c) for c in cols if c != key],
-        F.col("lsn").alias("_lsn"),
-        (F.col("op") == "delete").alias("_tombstone"),
-        "_n_ev",
-        "_wm",
-        "_bad",
-    )
-    snap_rel = table.stage_delta(deltas, extra_cols=["_n_ev", "_wm", "_bad"])
+    extra = ["_n_ev", "_wm", "_bad"]
+    deltas = _stored_rows(_dedup_with_stats(ev, key, table), key, cols, *extra)
+    snap_rel = table.stage_delta(deltas, extra_cols=extra)
     snap_abs = os.path.join(table.root, snap_rel)
 
     try:
@@ -584,9 +586,7 @@ def _apply_delta_fused(
                 StructField("_b", IntegerType()),
                 *table.schema.fields,
                 *INTERNAL_FIELDS,
-                StructField("_n_ev", LongType()),
-                StructField("_wm", LongType()),
-                StructField("_bad", LongType()),
+                *[StructField(c, LongType()) for c in extra],
             ]
         )
         stats = (
@@ -595,78 +595,28 @@ def _apply_delta_fused(
             )
             .groupBy("_b")
             .agg(
-                F.sum("_n_ev").alias("events_applied"),
-                F.max("_wm").alias("lsn_watermark"),
-                F.sum("_bad").alias("bad_events"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.coalesce(F.col("_tombstone"), F.lit(False)).cast("long")
-                ).alias("n_dels"),
-                # per-bucket key bounds + key bloom → manifest file
-                # statistics: keyed reads skip this whole delta when no
-                # probe fits the range / the key set
-                F.min(key).alias("_kmin"),
-                F.max(key).alias("_kmax"),
-                *key_bloom_agg_exprs(),
+                *_stats_aggs(F.coalesce(F.col("_tombstone"), F.lit(False))),
+                *_key_stats_aggs(key),
             )
             .collect()
         )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            raise ValueError(
-                f"batch {batch_id}: {bad} events with unknown op, null lsn, "
-                f"or null {key} (valid ops: {sorted(OP_RANK)}) — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
-            shutil.rmtree(snap_abs, ignore_errors=True)
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
+        _refuse_malformed(stats, batch_id, key)
+        if stats:
+            return table.commit_staged_delta(
+                snap_rel,
+                **_delta_stats(stats),
                 tag=tag,
-                summary={"operation": "merge", "events": 0},
+                lineage=_lineage(stats, batch_id),
+                summary=_merge_summary(stats, "delta"),
                 retry_on_conflict=retry_on_conflict,
             )
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n"]) - int(r["n_dels"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
-            )
-            for r in stats
-        ]
-        bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats}
-        key_bounds = {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats}
-        return table.commit_staged_delta(
-            snap_rel,
-            bucket_rows,
-            key_bounds=key_bounds,
-            key_blooms=pack_key_blooms(stats),
-            tag=tag,
-            lineage=lineage,
-            summary={
-                "operation": "merge",
-                "strategy": "delta",
-                "touched_buckets": len(touched),
-                # ids let concurrent rewrites prove bucket-disjointness
-                # when rebasing past this commit
-                "bucket_ids": sorted(touched),
-                "winners": sum(bucket_rows.values()),
-            },
-            retry_on_conflict=retry_on_conflict,
-        )
     except Exception:
-        # nothing committed — reclaim the staged dir now (not waiting for
-        # expire_snapshots) and restore the handle's pre-batch schema
-        # state; idempotent with the empty-batch rmtree above
+        # nothing committed — reclaim the staged dir now, not waiting
+        # for expire_snapshots
         shutil.rmtree(snap_abs, ignore_errors=True)
-        table.manifest["current_schema_id"] = saved_schema_id
-        table.manifest["schemas"] = saved_schemas
         raise
+    shutil.rmtree(snap_abs, ignore_errors=True)
+    return None
 
 
 def _merge_join(
@@ -720,17 +670,9 @@ def _merge_join(
     # arbitrary partitioning and the dynamic-partition writer would emit
     # (#tasks × #buckets) tiny files; this shuffle moves only the small
     # additions set, never the target.
-    additions = (
-        winners.join(F.broadcast(existing), key, "left_anti")
-        .select(
-            "_b",
-            F.col(key),
-            *[F.col(c) for c in cols if c != key],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == "delete").alias("_tombstone"),
-        )
-        .repartition(table.n_buckets, "_b")
-    )
+    additions = _stored_rows(
+        winners.join(F.broadcast(existing), key, "left_anti"), key, cols
+    ).repartition(table.n_buckets, "_b")
     return resolved.unionByName(additions)
 
 
@@ -752,13 +694,7 @@ def _merge_shuffle(
         target.withColumn("_b", table.bucket_of())
         .withColumn("_in", F.lit(0))
     )
-    incoming = winners.select(
-        *cols,
-        "_b",
-        F.col("lsn").alias("_lsn"),
-        (F.col("op") == "delete").alias("_tombstone"),
-        F.lit(1).alias("_in"),
-    )
+    incoming = _stored_rows(winners, key, cols, F.lit(1).alias("_in"))
     merged_all = t.unionByName(incoming).repartition(max(n_touched, 1), "_b")
     w = Window.partitionBy("_b", key).orderBy(F.col("_lsn").desc(), F.col("_in").desc())
     return (
@@ -768,17 +704,9 @@ def _merge_shuffle(
     )
 
 
-def _merged_schema(table: IceboxTable) -> StructType:
-    from pyspark.sql.types import IntegerType
-
-    return StructType([*table.schema.fields]).add("_b", IntegerType())
-
-
 def replay_log(
     table: IceboxTable,
     log: DataFrame,
-    n_salts: int = 16,
-    dedup_strategy: str = "agg",
     merge_strategy: str = "auto",
 ) -> IceboxTable:
     """Batch-mode replay: apply the log's batches in batch_id order.
@@ -795,8 +723,6 @@ def replay_log(
             table,
             log.filter(F.col("batch_id") == b),
             b,
-            n_salts=n_salts,
-            dedup_strategy=dedup_strategy,
             merge_strategy=merge_strategy,
         )
     return table

@@ -47,16 +47,17 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..icebox.table import (
-    IceboxTable,
-    key_bloom_agg_exprs,
-    key_bloom_prep,
-    pack_key_blooms,
-)
-from .apply import (
+from ..icebox.table import IceboxTable, key_bloom_prep
+from .apply import (  # noqa: F401  normalize_events: re-exported name
     _bad_event_pred,
-    _merged_schema,
+    _delta_stats,
+    _key_stats_aggs,
+    _lineage,
+    _merge,
+    _merge_summary,
     _op_rank_col,
+    _refuse_malformed,
+    _stats_aggs,
     normalize_events,
 )
 
@@ -199,48 +200,37 @@ def apply_batch_partial(
         # (gated: the old row must be live and not deleted-past)
         return F.coalesce(F.col(c), F.when(old_ok, F.col(f"_old_{c}")))
 
-    return _apply_columnar(
-        table,
-        events,
-        batch_id,
-        fold_partial_updates,
-        combine,
-        mode="partial",
-        tag_prefix=tag_prefix,
-        merge_strategy=merge_strategy,
-        retry_on_conflict=retry_on_conflict,
-        enforce_order=enforce_order,
+    return _merge(
+        table, events, batch_id, tag_prefix, retry_on_conflict,
+        lambda ev, tag: _apply_columnar(
+            table, ev, batch_id, tag, fold_partial_updates, combine, "partial",
+            merge_strategy, retry_on_conflict, enforce_order,
+        ),
     )
 
 
 def _apply_columnar(
     table: IceboxTable,
-    events: DataFrame,
+    ev: DataFrame,
     batch_id: int | str,
+    tag: str,
     fold_fn,
     combine_fn,
     mode: str,
-    tag_prefix: str = "batch",
-    merge_strategy: str = "delta",
-    retry_on_conflict: int = 0,
-    enforce_order: bool = False,
-) -> IceboxTable:
+    merge_strategy: str,
+    retry_on_conflict: int,
+    enforce_order: bool,
+) -> IceboxTable | None:
     """Shared columnar-merge core (partial-update AND aggregation merge
-    engines — see cdc/aggregate.py). fold_fn(ev, key, cols) must return
+    engines — see cdc/aggregate.py), run inside cdc.apply._merge on the
+    normalized events. fold_fn(ev, key, cols) must return
     one row per key carrying the payload cols (batch-resolved values,
     null = "nothing to contribute") plus the meta contract
     (_live, _had_del, _del_lsn, _wm, _n_ev, _bad); combine_fn(c, old_ok,
     types) builds the fresh+live merged value of column c from the batch
     column `c` and the stored `_old_{c}`."""
-    tag = f"{tag_prefix}:{batch_id}"
-    if table.has_tag(tag):
-        return table
     key = table.key
-    saved_schema_id = table.manifest["current_schema_id"]
-    saved_schemas = dict(table.manifest["schemas"])
-    ev = normalize_events(events, table)
     cols = [f.name for f in table.schema.fields if f.name != key]
-
     folded = (
         fold_fn(ev, key, cols)
         .withColumn("_b", table.bucket_of())
@@ -251,34 +241,15 @@ def _apply_columnar(
             key_bloom_prep(folded, key)
             .groupBy("_b")
             .agg(
-                F.sum("_n_ev").alias("events_applied"),
-                F.max("_wm").alias("lsn_watermark"),
+                *_stats_aggs(~F.col("_live")),
                 F.min("_wm").alias("_wm_min"),
-                F.sum("_bad").alias("bad_events"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum((~F.col("_live")).cast("long")).alias("n_dels"),
-                F.min(key).alias("_kmin"),
-                F.max(key).alias("_kmax"),
-                *key_bloom_agg_exprs(),
+                *_key_stats_aggs(key),
             )
             .collect()
         )
-        bad = sum(r["bad_events"] or 0 for r in stats)
-        if bad:
-            table.manifest["current_schema_id"] = saved_schema_id
-            table.manifest["schemas"] = saved_schemas
-            raise ValueError(
-                f"batch {batch_id}: {bad} malformed events — refusing to apply"
-            )
-        touched = [int(r["_b"]) for r in stats if r["n"]]
-        if not touched:
-            return table.commit_rewrite(
-                table.spark.createDataFrame([], _merged_schema(table)),
-                [],
-                tag=tag,
-                summary={"operation": "merge", "events": 0},
-                retry_on_conflict=retry_on_conflict,
-            )
+        _refuse_malformed(stats, batch_id, key)
+        if not stats:
+            return None
 
         # optional in-order transport check: the columnar engines require
         # LSN-ordered batches; an entirely-stale key is rendered HARMLESS
@@ -297,10 +268,8 @@ def _apply_columnar(
         if enforce_order:
             prev = _last_logical_summary(table)
             if prev.get("mode") == mode and prev.get("lsn_watermark") is not None:
-                batch_min = min(int(r["_wm_min"]) for r in stats if r["n"])
+                batch_min = min(int(r["_wm_min"]) for r in stats)
                 if batch_min <= int(prev["lsn_watermark"]):
-                    table.manifest["current_schema_id"] = saved_schema_id
-                    table.manifest["schemas"] = saved_schemas
                     raise ValueError(
                         f"batch {batch_id}: out-of-order feed — a key's "
                         f"newest lsn {batch_min} is <= the previous "
@@ -311,6 +280,14 @@ def _apply_columnar(
                     )
 
         delta_mode = merge_strategy == "delta"
+        summary = _merge_summary(
+            stats,
+            "delta" if delta_mode else "shuffle",
+            mode=mode,
+            # feeds the next batch's in-order enforcement (above)
+            lsn_watermark=max(int(r["lsn_watermark"]) for r in stats),
+        )
+        touched = summary["bucket_ids"]
         old = table.read(buckets=touched, internal=True)
         if delta_mode:
             # O(batch): only rows the batch's keys can touch; the keyed
@@ -360,41 +337,14 @@ def _apply_columnar(
             .alias("_tombstone"),
         ).withColumn("_b", table.bucket_of())
 
-        bid = int(batch_id) if str(batch_id).lstrip("-").isdigit() else -1
-        lineage = [
-            (
-                bid,
-                int(r["_b"]),
-                int(r["events_applied"]),
-                int(r["n"]) - int(r["n_dels"] or 0),
-                int(r["n_dels"] or 0),
-                int(r["lsn_watermark"]),
-            )
-            for r in stats
-        ]
-        summary = {
-            "operation": "merge",
-            "strategy": "delta" if delta_mode else "shuffle",
-            "mode": mode,
-            "touched_buckets": len(touched),
-            "bucket_ids": sorted(touched),
-            "winners": sum(int(r["n"]) for r in stats),
-            # feeds the next batch's in-order enforcement (above)
-            "lsn_watermark": max(
-                int(r["lsn_watermark"]) for r in stats if r["n"]
-            ),
-        }
+        lineage = _lineage(stats, batch_id)
         if delta_mode:
-            bucket_rows = {int(r["_b"]): int(r["n"]) for r in stats}
-            key_bounds = {int(r["_b"]): (r["_kmin"], r["_kmax"]) for r in stats}
             return table.commit_delta(
                 resolved,
-                bucket_rows,
+                **_delta_stats(stats),
                 tag=tag,
                 lineage=lineage,
                 summary=summary,
-                key_bounds=key_bounds,
-                key_blooms=pack_key_blooms(stats),
                 retry_on_conflict=retry_on_conflict,
             )
         return table.commit_rewrite(
@@ -406,10 +356,6 @@ def _apply_columnar(
             retry_on_conflict=retry_on_conflict,
             collect_stats=False,  # hot per-batch path
         )
-    except Exception:
-        table.manifest["current_schema_id"] = saved_schema_id
-        table.manifest["schemas"] = saved_schemas
-        raise
     finally:
         folded.unpersist()
 

@@ -33,7 +33,6 @@ def run_stream(
     table_root: str,
     checkpoint_dir: str,
     query_name: str = "cdc",
-    n_salts: int = 16,
     max_files_per_trigger: int | None = None,
     await_all: bool = True,
     merge_strategy: str = "auto",
@@ -58,7 +57,10 @@ def run_stream(
 
     Returns the StreamingQuery (stopped already if await_all=True).
     The table must exist; reload it per epoch so a restarted stream sees
-    the committed snapshot chain.
+    the committed snapshot chain. Row-mode epochs dedup with the LWW
+    hash aggregate, whose map-side partial aggregation spreads hot keys;
+    an epoch with no events commits only its tag, as a metadata-only
+    snapshot.
 
     merge_strategy="delta" is the steady-state production shape (O(batch)
     writes, see cdc.apply); pair it with compact_ratio (e.g. 0.5) to fold
@@ -196,7 +198,6 @@ def run_stream(
                 table,
                 batch_df,
                 batch_id=epoch_id,
-                n_salts=n_salts,
                 tag_prefix=f"stream:{query_name}",
                 merge_strategy=merge_strategy,
                 quarantine_dir=quarantine_dir,

@@ -511,20 +511,17 @@ class IceboxTable:
         new snapshot, zero data movement — like rollback/split it needs
         no exactly-once tag and is safe to re-run after a crash."""
         new_id = max(int(k) for k in self.manifest["schemas"]) + 1
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
-            "schemas": {
-                **self.manifest["schemas"],
-                str(new_id): StructType(new_fields).json(),
+        return self._publish(
+            None,
+            summary,
+            lambda base: {
+                "schemas": {
+                    **base["schemas"],
+                    str(new_id): StructType(new_fields).json(),
+                },
+                "current_schema_id": new_id,
             },
-            "current_schema_id": new_id,
-            "summary": summary,
-        }
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        )
 
     def rename_column(self, old: str, new: str) -> "IceboxTable":
         """Rename a column WITHOUT rewriting any data file (Iceberg
@@ -1015,21 +1012,7 @@ class IceboxTable:
             }
         touched_strs = {str(b) for b in touched_buckets}
 
-        lineage_rel = None
-        if lineage is not None:
-            if isinstance(lineage, DataFrame):
-                lineage = [tuple(r) for r in lineage.collect()]
-            # lineage lives OUTSIDE the per-snapshot data dirs (under the
-            # always-referenced data/lineage/): lineage_paths is cumulative,
-            # so co-locating it with snapshot data would pin every
-            # historical snapshot dir forever and expire_snapshots could
-            # never reclaim superseded bucket data
-            lineage_rel = os.path.join("data", "lineage", snap_dirname)
-            _write_lineage_local(os.path.join(self.root, lineage_rel), lineage)
-
-        tbl, retries = self, retry_on_conflict
-        while True:
-            base = tbl.manifest
+        def update(base: dict) -> dict:
             new_buckets = dict(base["buckets"])
             for b in touched_buckets:
                 if b in written:
@@ -1068,33 +1051,16 @@ class IceboxTable:
                             else:
                                 nd.pop(stat)
                     new_deltas.append(nd)
+            return {"buckets": new_buckets, "deltas": new_deltas}
 
-            manifest = {
-                **base,
-                "snapshot_id": tbl.snapshot_id + 1,
-                "parent_id": tbl.snapshot_id,
-                "tag": tag,
-                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
-                "buckets": new_buckets,
-                "deltas": new_deltas,
-                "lineage_paths": list(base["lineage_paths"])
-                + ([lineage_rel] if lineage_rel else []),
-                "summary": summary or {},
-            }
-            try:
-                tbl._check_current()
-                tbl._write_manifest(manifest)
-                return IceboxTable(self.spark, self.root, manifest)
-            except ConcurrentCommitError:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                fresh = self._rebase_for_retry(
-                    tbl.manifest, tag, touched_buckets=touched_buckets
-                )
-                if fresh is None:  # our tag won via the other writer
-                    return IceboxTable.load(self.spark, self.root)
-                tbl = fresh
+        return self._publish(
+            tag,
+            summary or {},
+            update,
+            lineage_rel=_write_lineage(self.root, snap_dirname, lineage),
+            touched_buckets=touched_buckets,
+            retry_on_conflict=retry_on_conflict,
+        )
 
     def stage_delta(self, deltas: DataFrame, extra_cols: list[str] | None = None) -> str:
         """Write a delta file set for the NEXT snapshot WITHOUT committing;
@@ -1148,8 +1114,11 @@ class IceboxTable:
         retry_on_conflict: int = 0,
     ) -> "IceboxTable":
         """Publish a delta file set previously written by stage_delta —
-        the metadata half of commit_delta (manifest append + lineage),
-        no Spark job.
+        the metadata half of commit_delta (lineage write + manifest
+        append through _publish, the commit loop every writer shares),
+        no Spark job. The fused merge-on-read apply stages and publishes
+        every non-empty row-level batch this way; an empty batch skips
+        it and commits its tag alone.
 
         key_bounds: optional {bucket: (min_key, max_key)} over the delta's
         rows — manifest-level file statistics (the Iceberg
@@ -1173,8 +1142,6 @@ class IceboxTable:
         staged files — no data is rewritten."""
         if tag is not None and self.has_tag(tag):
             return self
-        snap_dirname = os.path.basename(snap_rel)
-
         entry = {
             "path": snap_rel,
             # schema the staged files were WRITTEN with — pinned across a
@@ -1182,68 +1149,25 @@ class IceboxTable:
             "schema_id": self.manifest["current_schema_id"],
             "bucket_rows": {str(b): int(n) for b, n in bucket_rows.items()},
         }
-        if key_bounds:
-            safe = {
-                str(b): [lo, hi]
-                for b, (lo, hi) in key_bounds.items()
-                if isinstance(lo, (str, int, float))
-                and isinstance(hi, (str, int, float))
-                and not isinstance(lo, bool)
-                and not isinstance(hi, bool)
-            }
+        # zone maps (col_bounds) are {field_id: [lo, hi]} over the WHOLE
+        # delta commit (entry granularity — its files span buckets)
+        for name, bounds in (("key_bounds", key_bounds), ("col_bounds", col_bounds)):
+            safe = _json_safe_bounds(bounds or {})
             if safe:
-                entry["key_bounds"] = safe
+                entry[name] = safe
         if key_blooms:
             entry["key_blooms"] = {
                 str(b): v for b, v in key_blooms.items() if isinstance(v, str)
             }
-        if col_bounds:
-            # zone maps: {field_id: [lo, hi]} over the WHOLE delta commit
-            # (entry granularity — its files span buckets). JSON-safe
-            # scalars only; anything else is dropped, pruning degrades.
-            safe = {
-                str(k): [lo, hi]
-                for k, (lo, hi) in col_bounds.items()
-                if isinstance(lo, (str, int, float))
-                and isinstance(hi, (str, int, float))
-                and not isinstance(lo, bool)
-                and not isinstance(hi, bool)
-            }
-            if safe:
-                entry["col_bounds"] = safe
-        lineage_rel = None
-        if lineage is not None:
-            if isinstance(lineage, DataFrame):
-                lineage = [tuple(r) for r in lineage.collect()]
-            lineage_rel = os.path.join("data", "lineage", snap_dirname)
-            _write_lineage_local(os.path.join(self.root, lineage_rel), lineage)
-
-        tbl, retries = self, retry_on_conflict
-        while True:
-            base = tbl.manifest
-            manifest = {
-                **base,
-                "snapshot_id": tbl.snapshot_id + 1,
-                "parent_id": tbl.snapshot_id,
-                "tag": tag,
-                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
-                "deltas": list(base.get("deltas") or []) + [entry],
-                "lineage_paths": list(base["lineage_paths"])
-                + ([lineage_rel] if lineage_rel else []),
-                "summary": summary or {},
-            }
-            try:
-                tbl._check_current()
-                tbl._write_manifest(manifest)
-                return IceboxTable(self.spark, self.root, manifest)
-            except ConcurrentCommitError:
-                if retries <= 0:
-                    raise
-                retries -= 1
-                fresh = self._rebase_for_retry(tbl.manifest, tag)
-                if fresh is None:  # our tag won via the other writer
-                    return IceboxTable.load(self.spark, self.root)
-                tbl = fresh
+        return self._publish(
+            tag,
+            summary or {},
+            lambda base: {"deltas": list(base.get("deltas") or []) + [entry]},
+            lineage_rel=_write_lineage(
+                self.root, os.path.basename(snap_rel), lineage
+            ),
+            retry_on_conflict=retry_on_conflict,
+        )
 
     def commit_delta(
         self,
@@ -1516,24 +1440,21 @@ class IceboxTable:
         meta_dir = os.path.join(self.root, "metadata")
         with open(os.path.join(meta_dir, f"snap-{snapshot_id:08d}.json")) as f:
             old = json.load(f)
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
-            "buckets": old["buckets"],
-            "deltas": old.get("deltas") or [],
-            # layout travels WITH the state: rolling back across a
-            # split_buckets must restore the old bucket count, or
-            # bucket_of() disagrees with the physical layout and every
-            # bucket-pruned read/merge silently drops keys
-            "n_buckets": old["n_buckets"],
-            "current_schema_id": old["current_schema_id"],
-            "schemas": old["schemas"],
-            "summary": {"operation": "rollback", "to": snapshot_id},
-        }
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        return self._publish(
+            None,
+            {"operation": "rollback", "to": snapshot_id},
+            lambda base: {
+                "buckets": old["buckets"],
+                "deltas": old.get("deltas") or [],
+                # layout travels WITH the state: rolling back across a
+                # split_buckets must restore the old bucket count, or
+                # bucket_of() disagrees with the physical layout and every
+                # bucket-pruned read/merge silently drops keys
+                "n_buckets": old["n_buckets"],
+                "current_schema_id": old["current_schema_id"],
+                "schemas": old["schemas"],
+            },
+        )
 
     def changes(
         self,
@@ -2128,21 +2049,14 @@ class IceboxTable:
             new_buckets[b] = e
         if not changed:
             return self
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
-            "buckets": new_buckets,
-            "deltas": new_deltas,
+        return self._publish(
+            None,
             # bucket_ids: [] — metadata-only, touches no buckets, so a
             # concurrent rewrite's retry_on_conflict rebase can prove
             # disjointness instead of failing
-            "summary": {"operation": "analyze", "bucket_ids": []},
-        }
-        self._check_current()
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+            {"operation": "analyze", "bucket_ids": []},
+            lambda base: {"buckets": new_buckets, "deltas": new_deltas},
+        )
 
     def compact_lineage(
         self, max_paths: int = 64, retention_batches: int | None = None
@@ -2217,23 +2131,13 @@ class IceboxTable:
         pq.write_table(
             merged, os.path.join(self.root, rel, "lineage.parquet")
         )
-        manifest = {
-            **self.manifest,
-            "snapshot_id": self.snapshot_id + 1,
-            "parent_id": self.snapshot_id,
-            "tag": None,
-            "lineage_paths": (
-                keep + [rel] if fold is tail else [rel] + keep
-            ),
-            "summary": {
-                "operation": "compact_lineage",
-                "folded": len(fold),
-                "bucket_ids": [],
+        return self._publish(
+            None,
+            {"operation": "compact_lineage", "folded": len(fold), "bucket_ids": []},
+            lambda base: {
+                "lineage_paths": keep + [rel] if fold is tail else [rel] + keep
             },
-        }
-        self._check_current()
-        self._write_manifest(manifest)
-        return IceboxTable(self.spark, self.root, manifest)
+        )
 
     def expire_snapshots(
         self, keep_last: int = 5, older_than: float | None = None,
@@ -2379,6 +2283,50 @@ class IceboxTable:
         return self.commit_rewrite(
             merged, list(range(self.n_buckets)), tag=tag, summary={"operation": "overwrite"}
         )
+
+    def _publish(
+        self,
+        tag: str | None,
+        summary: dict,
+        update=None,
+        lineage_rel: str | None = None,
+        touched_buckets: "list[int] | None" = None,
+        retry_on_conflict: int = 0,
+    ) -> "IceboxTable":
+        """The one snapshot commit every writer goes through: the child
+        manifest of this handle's snapshot plus the fields `update(base)`
+        returns, refused if CURRENT moved past the handle. On
+        ConcurrentCommitError with retries left, rebase onto the winner
+        (`touched_buckets` makes a rewrite prove bucket-disjointness) and
+        rebuild on the fresh base."""
+        tbl, retries = self, retry_on_conflict
+        while True:
+            base = tbl.manifest
+            manifest = {
+                **base,
+                "snapshot_id": tbl.snapshot_id + 1,
+                "parent_id": tbl.snapshot_id,
+                "tag": tag,
+                "committed_tags": base["committed_tags"] + ([tag] if tag else []),
+                "lineage_paths": list(base["lineage_paths"])
+                + ([lineage_rel] if lineage_rel else []),
+                **(update(base) if update else {}),
+                "summary": summary,
+            }
+            try:
+                tbl._check_current()
+                tbl._write_manifest(manifest)
+                return IceboxTable(self.spark, self.root, manifest)
+            except ConcurrentCommitError:
+                if retries <= 0:
+                    raise
+                retries -= 1
+                fresh = self._rebase_for_retry(
+                    tbl.manifest, tag, touched_buckets=touched_buckets
+                )
+                if fresh is None:  # our tag won via the other writer
+                    return IceboxTable.load(self.spark, self.root)
+                tbl = fresh
 
     def _rebase_for_retry(
         self,
@@ -2712,12 +2660,36 @@ def _bounds_exclude(bounds, op: str, val) -> bool:
         return False
 
 
-def _write_lineage_local(dir_path: str, rows: list[tuple]) -> None:
-    """Lineage is O(#buckets) rows — write it driver-side with pyarrow
-    (a Spark job for a 64-row file costs seconds of fixed overhead).
-    Read back by read_lineage with LINEAGE_SCHEMA (types match)."""
+def _json_safe_bounds(bounds: dict) -> dict:
+    """{str(k): [lo, hi]} keeping only JSON-safe scalar bounds; anything
+    else is dropped (pruning is an optimization, never a correctness
+    dependency)."""
+
+    def ok(v) -> bool:
+        return isinstance(v, (str, int, float)) and not isinstance(v, bool)
+
+    return {
+        str(k): [lo, hi] for k, (lo, hi) in bounds.items() if ok(lo) and ok(hi)
+    }
+
+
+def _write_lineage(
+    root: str, snap_dirname: str, rows: "DataFrame | list[tuple] | None"
+) -> str | None:
+    """Write lineage rows to data/lineage/<snap_dirname>; returns that
+    path relative to `root`, None when `rows` is None. Lineage lives
+    OUTSIDE the per-snapshot data dirs: lineage_paths is cumulative, so
+    co-locating it would pin every historical snapshot dir forever.
+    O(#buckets) rows — driver-side pyarrow (a Spark job for a 64-row file
+    costs seconds), read back with LINEAGE_SCHEMA (types match)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+
+    if rows is None:
+        return None
+    if isinstance(rows, DataFrame):
+        rows = [tuple(r) for r in rows.collect()]
+    rel = os.path.join("data", "lineage", snap_dirname)
 
     schema = pa.schema(
         [
@@ -2733,8 +2705,9 @@ def _write_lineage_local(dir_path: str, rows: list[tuple]) -> None:
     t = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
     )
-    os.makedirs(dir_path, exist_ok=True)
-    pq.write_table(t, os.path.join(dir_path, "lineage.parquet"))
+    os.makedirs(os.path.join(root, rel), exist_ok=True)
+    pq.write_table(t, os.path.join(root, rel, "lineage.parquet"))
+    return rel
 
 
 def _conform(df: DataFrame, target: StructType) -> DataFrame:

@@ -196,21 +196,40 @@ def test_expire_orphan_grace_protects_inflight_staging(spark, tdir):
     assert IceboxTable.load(spark, root).read().count() == 6
 
 
-def test_concurrent_commit_rejected(spark, tdir):
+@pytest.mark.parametrize(
+    "stale_op",
+    [
+        pytest.param(lambda t, df: t.overwrite_all(df), id="overwrite"),
+        pytest.param(lambda t, df: t.rename_column("n_tok", "n"), id="rename"),
+        pytest.param(lambda t, df: t.drop_column("n_tok"), id="drop"),
+        pytest.param(lambda t, df: t.rollback(3), id="rollback"),
+    ],
+)
+def test_concurrent_commit_rejected(spark, tdir, stale_op):
     """Optimistic concurrency: a stale handle must not clobber a newer
-    snapshot (Iceberg-style single-winner swap)."""
+    snapshot (Iceberg-style single-winner swap) — data rewrites and
+    metadata-only commits (DDL, rollback) alike, even after
+    expire_snapshots removed the manifest the stale commit would take
+    the name of."""
     from data_pipeline_spark.icebox import ConcurrentCommitError
 
     root = os.path.join(tdir, "tcc")
     IceboxTable.create(spark, root, BASE_SCHEMA, n_buckets=4)
-    t1 = IceboxTable.load(spark, root)
-    t2 = IceboxTable.load(spark, root)
     df = _mkdf(spark, [("doc_1", [1], 1)])
-    t1.overwrite_all(df)
-    with pytest.raises(ConcurrentCommitError):
-        t2.overwrite_all(df)
-    # reload-and-retry works
     IceboxTable.load(spark, root).overwrite_all(df)
+    stale = IceboxTable.load(spark, root)  # snapshot 1
+    t = IceboxTable.load(spark, root).overwrite_all(df).overwrite_all(df)
+    t.expire_snapshots(keep_last=1)
+    current = os.path.join(root, "metadata", "CURRENT")
+    with open(current) as f:
+        before = f.read()
+    with pytest.raises(ConcurrentCommitError):
+        stale_op(stale, df)
+    with open(current) as f:
+        assert f.read() == before == "snap-00000003.json"
+    assert IceboxTable.load(spark, root).snapshot_id == 3
+    # reload-and-retry works
+    assert stale_op(IceboxTable.load(spark, root), df).snapshot_id == 4
 
 
 def test_split_buckets_partition_evolution(spark, tdir):

@@ -14,7 +14,12 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from data_pipeline_spark.cdc import apply_batch, replay_log
+from data_pipeline_spark.cdc import (
+    apply_batch,
+    apply_batch_agg,
+    apply_batch_partial,
+    replay_log,
+)
 from data_pipeline_spark.gen import gen_event_log
 from data_pipeline_spark.icebox import IceboxTable
 from data_pipeline_spark.icebox.table import ConcurrentCommitError
@@ -48,12 +53,10 @@ def test_delta_replay_equals_cow_replay(spark, tdir):
     t_cow = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "cow"), BASE_SCHEMA, n_buckets=8),
         log,
-        n_salts=4,
     )
     t_mor = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "mor"), BASE_SCHEMA, n_buckets=8),
         log,
-        n_salts=4,
         merge_strategy="delta",
     )
     assert_tables_equal(
@@ -80,13 +83,13 @@ def test_delta_write_amplification_is_batch_sized(spark, tdir):
                         partitions=4)
     t = IceboxTable.create(spark, os.path.join(tdir, "t"), BASE_SCHEMA,
                            n_buckets=8)
-    t = apply_batch(t, seed, "seed", n_salts=4, merge_strategy="delta")
+    t = apply_batch(t, seed, "seed", merge_strategy="delta")
     assert t.read().count() > 1500  # standing table >> every later batch
     per_commit = []
     prev = _delta_rows(t)
     for b in range(4):
         t = apply_batch(
-            t, inc.filter(F.col("batch_id") == b), f"inc{b}", n_salts=4,
+            t, inc.filter(F.col("batch_id") == b), f"inc{b}",
             merge_strategy="delta",
         )
         now = _delta_rows(t)
@@ -105,7 +108,7 @@ def test_compaction_bounds_files_and_preserves_reads(spark, tdir):
     max_files = 0
     for b in range(20):
         t = apply_batch(
-            t, log.filter(F.col("batch_id") == b), b, n_salts=4, merge_strategy="delta"
+            t, log.filter(F.col("batch_id") == b), b, merge_strategy="delta"
         )
         if b % 5 == 4:
             before = t.read().orderBy("doc_id").toPandas()
@@ -120,7 +123,6 @@ def test_compaction_bounds_files_and_preserves_reads(spark, tdir):
     t_cow = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "cow"), BASE_SCHEMA, n_buckets=4),
         log,
-        n_salts=4,
     )
     assert_tables_equal(
         t_cow.read().select(*PAYLOAD).toPandas(),
@@ -167,7 +169,6 @@ def test_expire_reclaims_space_for_cdc_tables(spark, tdir):
     t = replay_log(
         IceboxTable.create(spark, os.path.join(tdir, "t"), BASE_SCHEMA, n_buckets=4),
         log,
-        n_salts=4,
     )
     before = t.read().orderBy("doc_id").toPandas()
     res = t.expire_snapshots(keep_last=2)
@@ -350,21 +351,73 @@ def test_fused_delta_rejects_malformed_and_cleans_staged_dir(spark, tdir):
     assert os.listdir(os.path.join(root, "data")) == []
 
 
-def test_fused_delta_empty_batch_commits_tag_only(spark, tdir):
-    root = os.path.join(tdir, "tfe")
+EVENT_DDL = (
+    "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string"
+)
+# every merge engine: row LWW (merge-on-read delta and copy-on-write),
+# column-level LWW, per-column fold specs
+ENGINES = [
+    pytest.param(
+        lambda t, ev, b: apply_batch(t, ev, b, merge_strategy="delta"), id="row-delta"
+    ),
+    pytest.param(lambda t, ev, b: apply_batch(t, ev, b), id="row-cow"),
+    pytest.param(lambda t, ev, b: apply_batch_partial(t, ev, b), id="partial"),
+    pytest.param(
+        lambda t, ev, b: apply_batch_agg(t, ev, b, specs={"n_tok": "sum"}), id="agg"
+    ),
+]
+
+
+def _seeded(spark, root, apply):
+    """A table with one applied batch, and every dir under its data/."""
     t = IceboxTable.create(spark, root, BASE_SCHEMA, n_buckets=4)
-    empty = spark.createDataFrame(
-        [],
-        "lsn long, op string, doc_id string, tokens array<int>, n_tok int, source string",
-    )
-    t = apply_batch(t, empty, 7, merge_strategy="delta")
+    seed = spark.createDataFrame([(1, "upsert", "doc_1", [1], 1, "s")], EVENT_DDL)
+    return apply(t, seed, 0), _data_dirs(root)
+
+
+def _data_dirs(root):
+    return {d for d, _, _ in os.walk(os.path.join(root, "data"))}
+
+
+@pytest.mark.parametrize("apply", ENGINES)
+def test_empty_batch_commits_tag_only(spark, tdir, apply):
+    """A batch with no events commits its tag as a metadata-only
+    snapshot: no data written, replay stays a no-op."""
+    root = os.path.join(tdir, "tfe")
+    t, dirs = _seeded(spark, root, apply)
+    rows, delta_rows = t.read().count(), _delta_rows(t)
+    empty = spark.createDataFrame([], EVENT_DDL)
+    t = apply(t, empty, 7)
     assert t.has_tag("batch:7")
-    assert t.read().count() == 0
-    assert _delta_rows(t) == 0
+    assert t.read().count() == rows
+    assert _delta_rows(t) == delta_rows
+    assert _data_dirs(root) == dirs
     # replay of the committed empty batch is still a no-op
     sid = t.snapshot_id
-    t = apply_batch(t, empty, 7, merge_strategy="delta")
+    t = apply(t, empty, 7)
     assert t.snapshot_id == sid
+
+
+@pytest.mark.parametrize("apply", ENGINES)
+def test_malformed_batch_refused_without_trace(spark, tdir, apply):
+    """Every engine refuses a batch carrying an unknown op: no snapshot,
+    the batch's column-add rolled back on the handle, no data left."""
+    root = os.path.join(tdir, "tfr")
+    t, dirs = _seeded(spark, root, apply)
+    sid, schema = t.snapshot_id, t.schema
+    bad = spark.createDataFrame(
+        [
+            (2, "frobnicate", "doc_1", [1], 1, "s", "en"),
+            (3, "upsert", "doc_2", [2], 1, "s", "de"),
+        ],
+        EVENT_DDL + ", lang string",
+    )
+    with pytest.raises(ValueError, match="unknown op"):
+        apply(t, bad, 1)
+    assert t.snapshot_id == sid
+    assert t.schema == schema
+    assert IceboxTable.load(spark, root).snapshot_id == sid
+    assert _data_dirs(root) == dirs
 
 
 def test_fused_delta_hidden_stats_columns_invisible(spark, tdir):

@@ -412,16 +412,11 @@ def main() -> None:
          re.search(r"SortMergeJoin", join_plan) is None),
     ]
 
-    # the fused delta-stage plan exactly as _apply_delta_fused builds it:
-    # stats columns ride along, partition-local sort, no coalesce (AQE
-    # sizes the write), and — the scale property — ONE exchange total
-    deltas = winners.select(
-        "_b", F.col(tbl.key),
-        *[F.col(c) for c in cols if c != tbl.key],
-        F.col("lsn").alias("_lsn"),
-        (F.col("op") == "delete").alias("_tombstone"),
-        "_n_ev", "_wm", "_bad",
-    )
+    # the fused delta-stage plan through the same winners → stored-row
+    # helper _apply_delta_fused stages: stats columns ride along,
+    # partition-local sort, no coalesce (AQE sizes the write), and — the
+    # scale property — ONE exchange total
+    deltas = A._stored_rows(winners, tbl.key, cols, "_n_ev", "_wm", "_bad")
     delta_plan = _fmt(
         deltas.select("_b", *cols, "_lsn", "_tombstone", "_n_ev", "_wm", "_bad")
         .sortWithinPartitions("_b", tbl.key)
